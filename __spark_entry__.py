@@ -74,8 +74,12 @@ _MODULE_DEPS: dict[str, list[str]] = {
         f"{_PKG}/workspace.py",
     ],
     "graph_queries": [f"{_PKG}/operators/graph.py"],
+    # dedup.near_dup_clusters closes its pair graph with
+    # operators.graph.connected_components, so every probe module
+    # importing dedup watches graph.py too
     "pipeline_queries": [
         f"{_PKG}/operators/dedup.py",
+        f"{_PKG}/operators/graph.py",
         f"{_PKG}/operators/similarity.py",
         f"{_PKG}/operators/multimodal.py",
         f"{_PKG}/operators/text.py",
@@ -88,6 +92,7 @@ _MODULE_DEPS: dict[str, list[str]] = {
     ],
     "pipeline_queries3": [
         f"{_PKG}/operators/dedup.py",
+        f"{_PKG}/operators/graph.py",
         f"{_PKG}/operators/text.py",
     ],
     "pipeline_queries4": [

@@ -15,9 +15,10 @@ pointers — the idiomatic equivalents are:
   DataFrame joins + aggregations (C6; cf. the GraphX/Pregel model)
 
 Conventions: ``edges(src: long, dst: long, ...)``, ``nodes(node_id:
-long, ...)``. All loops are O(diameter) or fixed-iteration; each round
-is one distributed join + aggregation, and only the loop-termination
-scalar ever reaches the driver.
+long, ...)``. All loops are O(diameter), O(log^2 n) (CC's star
+contraction) or fixed-iteration; each round is one distributed join +
+aggregation, and only the loop-termination scalar ever reaches the
+driver.
 
 Scale notes (100 TB):
 - Frontiers and component tables carry only (id, value) — the shuffle
@@ -25,10 +26,12 @@ Scale notes (100 TB):
 - `localCheckpoint(eager=True)` every round truncates lineage so plan
   size stays O(1) across iterations (otherwise Catalyst re-analyzes an
   exponentially growing tree).
-- hash-min CC converges in O(diameter) rounds; for the pathological
-  high-diameter case the known fix is large-star/small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC 2014) — same DataFrame shape, noted as the scale path.
+- CC has one engine: a driver union-find for edge sets at or under
+  ``spark.graft.cc.driverEdgeCap``, otherwise large-star/small-star
+  contraction (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC 2014; O(log^2 n) rounds whatever the diameter) that
+  hands the shrunken edge set to the union-find once it fits under
+  the same cap.
 - PageRank joins ranks⋈edges on src each round: pre-partitioning the
   edge list by src (workspace write contract) makes this a one-sided
   shuffle; AQE broadcasts the rank side when small.
@@ -38,7 +41,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from biodwh2_arcadedb_server_spark.localrel import local_df
 
@@ -351,36 +354,43 @@ def link_prediction(edges: DataFrame) -> DataFrame:
     )
 
 
-# --- C6: connected components (hash-min) --------------------------------------------
+# --- C6: connected components --------------------------------------------------------
 def _cc_driver_edge_cap(spark) -> int:
-    """Edge-count gate for the driver union-find fast path (conf
+    """Edge-count gate for the driver union-find (conf
     ``spark.graft.cc.driverEdgeCap``, default 100k edges ≈ a few MB
     collected). Near-dup pair graphs hold only documents that HAVE a
-    near-dup — a sliver of any corpus — so at bench scale the
-    distributed loop pays ~10 scheduling/planning round-trips to close
-    a few-hundred-edge graph (measured 4.6s for 918 edges at sf0.1).
-    Below the cap the closure is a driver-side union-find over the
-    already-counted edge list: the same bounded-collect posture as the
-    IVF trainer's sample-capped centroid fit (FAISS practice), with the
-    distributed loop unchanged above the cap. Set the conf to 0 to
-    force the distributed path."""
+    near-dup — a sliver of any corpus — so at bench scale a distributed
+    loop pays ~10 scheduling/planning round-trips to close a
+    few-hundred-edge graph (measured 4.6s for 918 edges at sf0.1).
+    At or under the cap the closure is a driver-side union-find over
+    the already-counted edge list: the same bounded-collect posture as
+    the IVF trainer's sample-capped centroid fit (FAISS practice). The
+    same cap decides when the star-contracted edge set is small enough
+    to hand to the union-find. Set the conf to 0 to run the star loop
+    to convergence."""
     try:
         return int(spark.conf.get("spark.graft.cc.driverEdgeCap", "100000"))
     except ValueError:
         return 100000
 
 
-def _cc_driver(
-    und: DataFrame, node_type, id_col_out: str
-) -> DataFrame:
-    """Driver union-find over a small, pre-counted undirected edge
-    list. Roots stay the minimum id of their tree (smaller root wins
-    every union), so the final root of each node IS the component's
-    min node id — identical output to the iterative min-propagation.
-    Result is checkpointed so multi-reference consumers (e.g. the
-    cluster audit's a/b sides) scan cached blocks, not a re-pickled
-    Python RDD."""
+def _cc_driver(und: DataFrame, id_col_out: str) -> DataFrame:
+    """Driver union-find over a small, pre-counted edge list (columns
+    ``src``, ``dst``; direction and duplicates do not matter). Roots
+    stay the minimum id of their tree (smaller root wins every union),
+    so the final root of each node IS the component's min node id.
+
+    Both crossings use Arrow: ``toArrow`` collects the edges without
+    building a Row per edge, and the result goes back as an Arrow
+    table, which plans as a JVM ``LocalTableScan`` — no Python worker
+    ever evaluates it, and consumers that reference it several times
+    (e.g. the cluster audit's a/b sides) rescan driver-held rows. On
+    a 4-core host, warm, a 38k-edge collect plus an 18k-row result
+    took ~0.25 s this way against ~0.75 s through Row objects and the
+    json-literal relation (``localrel.local_df``)."""
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     parent: dict = {}
 
@@ -392,8 +402,8 @@ def _cc_driver(
             parent[x], x = r, parent[x]
         return r
 
-    for row in und.select("src", "dst").collect():
-        a, b = row[0], row[1]
+    tb = und.select("src", "dst").toArrow()
+    for a, b in zip(tb.column(0).to_pylist(), tb.column(1).to_pylist()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -405,196 +415,106 @@ def _cc_driver(
             parent[rb] = ra
         else:
             parent[ra] = rb
-    rows = [(n, find(n)) for n in parent]
+    node_type = und.schema["src"].dataType
     schema = T.StructType(
         [
             T.StructField("node_id", node_type),
             T.StructField(id_col_out, node_type),
         ]
     )
-    spark = und.sparkSession
-    # json-literal relation (localrel): JVM-only evaluation — the
-    # pickled-RDD form of createDataFrame cost ~0.6s warm / ~2.3s cold
-    # in Python-worker round-trips per materialization; checkpoint so
-    # the literal parses once however many times consumers reference it
-    return local_df(
-        spark, rows, schema, row_cap=2_000_000
-    ).localCheckpoint(eager=False)
+    nodes = list(parent)
+    table = pa.table([nodes, [find(n) for n in nodes]], schema=to_arrow_schema(schema))
+    return und.sparkSession.createDataFrame(table, schema)
 
 
 def connected_components(
     edges: DataFrame, max_iter: int = 50, id_col_out: str = "component"
 ) -> DataFrame:
-    """Undirected CC via iterative min-id propagation. Returns
-    (node_id, component) where component = min node_id in the
-    component. Converges in O(diameter) rounds; see module docstring
-    for the large-star/small-star scale path."""
+    """Undirected CC. Returns (node_id, component) with component =
+    min node_id of the component, for every endpoint of ``edges``.
+
+    Edge sets at or under the driver cap (:func:`_cc_driver_edge_cap`)
+    close with the driver union-find. Larger ones run alternating
+    large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): O(log^2 n) rounds
+    regardless of diameter, over the *current* edge set, which shrinks
+    geometrically as stars collapse. Both phases keep every
+    non-isolated node in the edge set and preserve connectivity, so
+    once a round's contracted set (plus the self-loop rows, which
+    carry the self-loop-only nodes) is at or under the cap, the
+    union-find finishes it with the same answer. One round took the
+    128k-edge perfbench graph to ~38k edges. A set that never gets
+    under the cap runs to convergence — the scale path. Edge state is
+    canonical (big, small) pairs; both phases preserve that
+    orientation, so no re-canonicalization shuffle between rounds."""
     # Narrow materialization of the raw edge list first: the gate
-    # probe, the fast path's collect, and (above the cap) the
-    # undirected expansion all read it without re-evaluating the
-    # caller's pair pipeline. Union-find tolerates duplicate and
-    # directed edges, so the fast path skips the dropDuplicates
-    # shuffle entirely.
+    # probe, the driver's collect, and (above the cap) the star rounds
+    # all read it without re-evaluating the caller's pair pipeline.
+    # Union-find tolerates duplicate and directed edges, so the driver
+    # path skips the dedup shuffle entirely.
     raw = edges.select("src", "dst").localCheckpoint(eager=True)
-    if raw.count() <= _cc_driver_edge_cap(edges.sparkSession):
-        return _cc_driver(raw, raw.schema["src"].dataType, id_col_out)
-    und = (
-        raw.unionByName(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
+    cap = _cc_driver_edge_cap(edges.sparkSession)
+    is_loop = F.col("src") == F.col("dst")
+    n_raw, n_loops = raw.agg(
+        F.count(F.lit(1)), F.count(F.when(is_loop, 1))
+    ).first()
+    if n_raw <= cap:
+        return _cc_driver(raw, id_col_out)
+    # canonical (big, small) pairs, left lazy: the first round's
+    # minima and output dedup absorb duplicate edges, so a separate
+    # dedup pass would only add a job
+    e = raw.where(~is_loop).select(
+        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
     )
-    n_edges = und.count()
-    comp = (
-        und.select(F.col("src").alias("node_id"))
-        .distinct()
-        .withColumn("component", F.col("node_id"))
-        .localCheckpoint(eager=True)
-    )
-    # Loop shape (optimization r14, guide §1.2/§2.4). Two changes vs
-    # the original one-step-per-round form:
-    #
-    # 1. A propagation STEP is one join + one aggregation (the node's
-    #    own row rides the union into the same min-fold as the
-    #    neighbor messages) — the original paid a third exchange
-    #    joining neighbor minima back onto `comp` plus an extra join
-    #    for the convergence check.
-    # 2. Steps are BATCHED between checkpoints with a geometric
-    #    cadence (1, 2, 4, 4, ...): min-propagation is monotone, so
-    #    extra steps after convergence are no-ops, and checking only
-    #    at batch boundaries cuts the dominating per-round driver
-    #    cost (checkpoint job + convergence job + Catalyst analysis)
-    #    by ~3x on deep graphs. Shallow graphs (diameter <= 2, the
-    #    common near-dup case) still converge with zero wasted
-    #    passes because the cadence starts at 1. The batch is capped
-    #    at 4: un-checkpointed plan depth beyond that makes Catalyst
-    #    analysis itself the bottleneck (measured 12-20s at depth 8
-    #    vs 4.5s at depth 4 on the q106 closure; same cliff as the
-    #    iterative-probe checkpoint_every≈3 rule in SCALE.md).
-    #    Measured on the sf0.1 cosine closure (diameter 17):
-    #    17 checkpoints/6.4s -> 6 checkpoints/~4.5s, identical rows.
-    def _step(cur: DataFrame) -> DataFrame:
-        msgs = und.join(cur, und.dst == cur.node_id).select(
-            F.col("src").alias("node_id"), "component"
-        )
-        return (
-            msgs.unionByName(cur.select("node_id", "component"))
-            .groupBy("node_id")
-            .agg(F.min("component").alias("component"))
-        )
-
-    done, batch = 0, 1
-    with _tight_loop(edges.sparkSession, n_edges):
-        while done < max_iter:
-            k = min(batch, max_iter - done)
-            cur = comp
-            for _ in range(k):
-                cur = _step(cur)
-            upd = (
-                cur.alias("n")
-                .join(comp.alias("o"), "node_id")
-                .select(
-                    "node_id",
-                    F.col("n.component").alias("component"),
-                    (F.col("n.component") < F.col("o.component")).alias("_chg"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            # count(), not isEmpty(): isEmpty's executeTake cancels its
-            # probe job as soon as one partition answers, and the
-            # cancelled tasks race the ContextCleaner's accumulator
-            # cleanup (noisy "non-existent accumulator" scheduler
-            # errors). A count over the checkpointed handful of rows is
-            # the same single tiny job without the cancellation race.
-            n_changed = upd.where("_chg").count()
-            comp = upd.select("node_id", "component")
-            done += k
-            batch = min(batch * 2, 4)
-            if n_changed == 0:
-                break
-    return comp.select("node_id", F.col("component").alias(id_col_out))
-
-
-# --- C6: connected components (large-star/small-star) --------------------------------
-def connected_components_star(
-    edges: DataFrame, max_iter: int = 50, id_col_out: str = "component"
-) -> DataFrame:
-    """Undirected CC via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014). Returns (node_id, component) with component = min
-    node_id, identical to :func:`connected_components`.
-
-    Hash-min needs O(diameter) rounds — pathological on chain-shaped
-    graphs (a 100 TB citation or provenance graph easily has diameter
-    in the thousands). Star contraction converges in O(log^2 n) rounds
-    regardless of diameter; each round is two groupBy+join passes over
-    the *current* edge set, which shrinks geometrically as stars
-    collapse, so later rounds get cheaper. Edge state is canonical
-    (big, small) pairs; both phases preserve that orientation, so no
-    re-canonicalization shuffle between rounds.
-    """
-    # Same gate as hash-min: probe the raw edge list (narrow
-    # materialization, no canonicalization shuffle) and close small
-    # graphs with the driver union-find — raw edges cover every
-    # endpoint including self-loop-only nodes, so no left_anti tail.
-    raw = edges.select("src", "dst").localCheckpoint(eager=True)
-    if raw.count() <= _cc_driver_edge_cap(edges.sparkSession):
-        return _cc_driver(raw, raw.schema["src"].dataType, id_col_out)
-    e = (
-        raw.where(F.col("src") != F.col("dst"))
-        .select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
-    )
-    # keep the same node universe as hash-min: every endpoint, even
-    # self-loop-only nodes that the canonical edge set drops
-    nodes = (
-        raw.select(F.col("src").alias("node_id"))
-        .unionByName(raw.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_count = e.count()
-    with _tight_loop(edges.sparkSession, prev_count):
+    prev_count, converged = n_raw - n_loops, False
+    by_u = Window.partitionBy("u")
+    with _tight_loop(edges.sparkSession, n_raw):
         for _ in range(max_iter):
-            if prev_count == 0:
-                break
             # large-star: every node links its larger neighbors to
-            # min(neighborhood ∪ self)
+            # min(neighborhood ∪ self). Minima ride windows over the
+            # partition by u, so a round is three exchanges (two
+            # partitionings by u and the final dedup) instead of a
+            # groupBy + join-back per phase; min ignores duplicates, so
+            # only the output is deduplicated.
             n = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            mn = (
-                n.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", F.col("u")).alias("m"))
-            )
             large = (
-                n.join(mn, "u")
+                n.withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
                 .where(F.col("v") > F.col("u"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .dropDuplicates(["u", "v"])
             )
             # small-star: every node links its smaller neighbors and itself
             # to the minimum; edges are already directed big→small
-            mn2 = large.groupBy("u").agg(F.min("v").alias("m"))
             small = (
-                large.join(mn2, "u")
-                .select(F.col("v").alias("x"), "m")
-                .unionByName(mn2.select(F.col("u").alias("x"), "m"))
+                large.withColumn("m", F.min("v").over(by_u))
+                .select(F.explode(F.array("v", "u")).alias("x"), "m")
                 .where(F.col("x") != F.col("m"))
                 .select(F.col("x").alias("u"), F.col("m").alias("v"))
                 .dropDuplicates(["u", "v"])
                 .localCheckpoint(eager=True)
             )
             cnt = small.count()
+            # small ⊆ e with |small| >= |e| means e was a fixed point
             converged = cnt == prev_count and small.join(e, ["u", "v"], "left_anti").isEmpty()
             e, prev_count = small, cnt
-            if converged:
+            if converged or cnt + n_loops <= cap:
                 break
-    assigned = e.select(F.col("u").alias("node_id"), F.col("v").alias("component"))
-    roots = nodes.join(
-        e.select(F.col("u").alias("node_id")), "node_id", "left_anti"
-    ).select("node_id", F.col("node_id").alias("component"))
-    return assigned.unionByName(roots).select(
-        "node_id", F.col("component").alias(id_col_out)
+    if not converged and prev_count + n_loops <= cap:
+        return _cc_driver(
+            e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
+                raw.where(is_loop)
+            ),
+            id_col_out,
+        )
+    # converged stars: each non-root node carries one edge to its root;
+    # roots and self-loop-only nodes are their own component
+    nodes = (
+        raw.select(F.col("src").alias("node_id"))
+        .unionByName(raw.select(F.col("dst").alias("node_id")))
+        .distinct()
+    )
+    comp = e.select(F.col("u").alias("node_id"), F.col("v").alias("component"))
+    return nodes.join(comp, "node_id", "left").select(
+        "node_id", F.coalesce("component", "node_id").alias(id_col_out)
     )
 
 
@@ -962,16 +882,18 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     )
     n_edges = live.count()
 
-    # Peel steps BATCHED between checkpoints with the CC loop's
-    # geometric cadence (optimization r15, VERDICT r14 next #7):
+    # Peel steps BATCHED between checkpoints with a geometric cadence
+    # (1, 2, 4, 4, ...; optimization r15, VERDICT r14 next #7):
     # peeling is monotone (the live edge set only shrinks) and
     # idempotent at the fixpoint, so an unchanged edge count across a
     # batch proves no step in the batch removed anything — the same
     # argument as min-propagation — and extra steps past convergence
     # are no-ops. Checking/checkpointing per batch cuts the per-round
     # driver cost (checkpoint job + count job + Catalyst analysis)
-    # ~2-3x on deep peelings; the batch caps at 4 (the measured
-    # Catalyst plan-depth cliff, see connected_components).
+    # ~2-3x on deep peelings; the batch caps at 4: un-checkpointed plan
+    # depth beyond that makes Catalyst analysis itself the bottleneck
+    # (measured 12-20s at depth 8 vs 4.5s at depth 4 on a min-label
+    # loop over the q106 closure).
     def _peel(cur: DataFrame) -> DataFrame:
         deg = (
             cur.select(F.col("a").alias("n"))
@@ -1375,9 +1297,9 @@ def strongly_connected_components(
                 .localCheckpoint(eager=True)
             )
             # (1) forward min-label to fixpoint — steps BATCHED between
-            # checkpoints (optimization r15): this IS min-propagation,
-            # the same monotone fixpoint connected_components batches
-            # geometrically, and the (count, sum) fingerprint is
+            # checkpoints (optimization r15): min-propagation is a
+            # monotone fixpoint, batched like k_core's peel, and the
+            # (count, sum) fingerprint is
             # batch-valid for the same reason (count is constant, sum
             # only decreases — an unchanged fingerprint across a batch
             # proves no step changed any color; extra steps past the

@@ -30,7 +30,6 @@ from biodwh2_arcadedb_server_spark.operators.graph import (
     closeness_centrality,
     clustering_coefficient,
     connected_components,
-    connected_components_star,
     degrees,
     expand,
     hits,
@@ -125,9 +124,9 @@ def q22_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q65_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same CC result as q22 via large-star/small-star contraction —
-    the O(log^2 n) high-diameter scale path (graph.py docstring)."""
-    return connected_components_star(nation_graph(spark, sf_dir, 97))
+    """Same CC result as q22: kept as its own probe of the one CC
+    engine (star contraction + driver union-find, graph.py)."""
+    return connected_components(nation_graph(spark, sf_dir, 97))
 
 
 # --- C6: degrees ------------------------------------------------------------------------

@@ -38,17 +38,23 @@ COSINE_THRESHOLD = 0.4
 # Cache them as lazily-materialized localCheckpoints keyed by
 # (applicationId, sf_dir): the first probe in a session pays, the
 # rest reuse the checkpointed partitions; a bench session restart
-# changes the applicationId and naturally invalidates. Correctness is
-# untouched — the checkpoint holds exactly the DataFrame the probe
-# would have built.
+# changes the applicationId and naturally invalidates. A process runs
+# one SparkContext at a time, so entries under another applicationId
+# belong to a stopped session: each insert evicts them, or every
+# restart would pin its dead DataFrames for the process lifetime.
+# Correctness is untouched — the checkpoint holds exactly the
+# DataFrame the probe would have built.
 _SESSION_CACHE: dict = {}
 
 
 def _cached_ckpt(spark: SparkSession, key: tuple, builder) -> DataFrame:
-    full = (spark.sparkContext.applicationId, *key)
+    app = spark.sparkContext.applicationId
+    full = (app, *key)
     df = _SESSION_CACHE.get(full)
     if df is None:
         df = builder().localCheckpoint(eager=False)
+        for stale in [k for k in list(_SESSION_CACHE) if k[0] != app]:
+            _SESSION_CACHE.pop(stale, None)
         _SESSION_CACHE[full] = df
     return df
 

@@ -39,6 +39,7 @@ DML; the final swap is two directory renames.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import secrets
 import shutil
@@ -65,9 +66,25 @@ IDLE_TTL_SECONDS = 30 * 60
 
 
 def _manifest_fingerprint(ws_dir: str) -> str:
-    path = os.path.join(ws_dir, "manifest.json")
-    with open(path, "rb") as fh:
-        return hashlib.sha256(fh.read()).hexdigest()
+    """The manifest bytes plus each label directory's
+    ``(st_mtime_ns, st_ino)``. A value-only ``UPDATE`` leaves
+    manifest.json unchanged but swaps the label's dataset directory
+    (the same contract ``workspace._label_view_key`` relies on), so
+    without the directory stamps a commit could swap in a shadow that
+    lacks the update (lost update)."""
+    with open(os.path.join(ws_dir, "manifest.json"), "rb") as fh:
+        raw = fh.read()
+    h = hashlib.sha256(raw)
+    manifest = json.loads(raw)
+    for kind in ("nodes", "edges"):
+        for label in sorted(manifest.get(kind) or {}):
+            try:
+                st = os.stat(os.path.join(ws_dir, kind, label))
+                stamp = f"{st.st_mtime_ns}:{st.st_ino}"
+            except OSError:
+                stamp = "-"
+            h.update(f"\0{kind}/{label}={stamp}".encode())
+    return h.hexdigest()
 
 
 def _shadow_copy(base: str, shadow: str) -> None:

@@ -14,7 +14,6 @@ from biodwh2_arcadedb_server_spark.operators.graph import (
     triangles,
     bfs,
     connected_components,
-    connected_components_star,
     expand,
     label_propagation,
     pagerank,
@@ -57,58 +56,97 @@ def test_bfs_undirected(spark):
     assert got == {(1, 0), (2, 1), (3, 2)}
 
 
+def _py_cc(pairs):
+    """Plain-Python union-find reference: {(node, min id of its
+    component)} over every endpoint, self-loop-only nodes included."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+def _py_star_round(pairs):
+    """One large-star + small-star round (Kiveris et al.) over the
+    canonical (big, small) edge set, in plain Python."""
+    nbr = {}
+    for a, b in pairs:
+        if a != b:
+            nbr.setdefault(a, set()).add(b)
+            nbr.setdefault(b, set()).add(a)
+    large = {(v, min(min(ns), u)) for u, ns in nbr.items() for v in ns if v > u}
+    smaller = {}
+    for u, v in large:
+        smaller.setdefault(u, set()).add(v)
+    return {
+        (x, min(vs)) for u, vs in smaller.items() for x in vs | {u} if x != min(vs)
+    }
+
+
+def _cc(spark, e, cap=None, **kw):
+    """connected_components under an optional driverEdgeCap, as a set
+    of (node_id, component) after checking one row per node."""
+    if cap is not None:
+        spark.conf.set("spark.graft.cc.driverEdgeCap", str(cap))
+    try:
+        rows = [(r.node_id, r.component) for r in connected_components(e, **kw).collect()]
+    finally:
+        spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    assert len({n for n, _ in rows}) == len(rows)
+    return set(rows)
+
+
 def test_connected_components_two_islands(spark):
     e = _edges(spark, [(1, 2), (2, 3), (10, 11), (12, 11)])
     got = {(r.node_id, r.component) for r in connected_components(e).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)}
 
 
-def test_star_cc_matches_hashmin_islands(spark):
-    e = _edges(spark, [(1, 2), (2, 3), (10, 11), (12, 11), (20, 20)])
-    got = {(r.node_id, r.component) for r in connected_components_star(e).collect()}
-    want = {(r.node_id, r.component) for r in connected_components(e).collect()}
-    assert got == want == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10), (20, 20)}
+def test_cc_islands_match_union_find(spark):
+    pairs = [(1, 2), (2, 3), (10, 11), (12, 11), (20, 20)]
+    e = _edges(spark, pairs)
+    want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10), (20, 20)}
+    assert _py_cc(pairs) == want
+    assert _cc(spark, e) == _cc(spark, e, cap=0) == want
 
 
 def test_star_cc_long_chain(spark):
-    # diameter-128 path: hash-min's worst case, star's motivating case.
-    # max_iter=12 << diameter proves O(log^2 n) convergence.
-    # cap=0 forces the DISTRIBUTED loop — the driver union-find fast
-    # path would close this chain trivially and prove nothing.
+    # diameter-128 path: a min-propagation loop's worst case, star's
+    # motivating case. max_iter=12 << diameter proves O(log^2 n)
+    # convergence. cap=0 keeps the star loop running to convergence —
+    # the driver union-find would close this chain trivially and
+    # prove nothing.
     e = _edges(spark, [(i, i + 1) for i in range(128)])
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    try:
-        got = {(r.node_id, r.component) for r in connected_components_star(e, max_iter=12).collect()}
-    finally:
-        spark.conf.unset("spark.graft.cc.driverEdgeCap")
-    assert got == {(i, 0) for i in range(129)}
+    assert _cc(spark, e, cap=0, max_iter=12) == {(i, 0) for i in range(129)}
 
 
 def test_cc_driver_fast_path_matches_distributed(spark):
     # dupes, both directions, self-loops, singleton-via-self-loop —
-    # the fast path (default cap) must equal the distributed loop
-    # (cap=0) for both CC variants, including plan-level reuse
-    # (two references to the result scan checkpoint blocks).
+    # the fast path (default cap) must equal the star loop (cap=0)
+    # and the union-find reference, including plan-level reuse (two
+    # references to the result scan checkpoint blocks).
     import random
 
     rng = random.Random(41)
     pairs = [(rng.randrange(80), rng.randrange(80)) for _ in range(120)]
     pairs += [(5, 5), (77, 77), (3, 2), (2, 3), (2, 3)]
     e = _edges(spark, pairs)
-    fast_hm = {(r.node_id, r.component) for r in connected_components(e).collect()}
-    fast_st = {(r.node_id, r.component) for r in connected_components_star(e).collect()}
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    try:
-        slow_hm = {(r.node_id, r.component) for r in connected_components(e).collect()}
-        slow_st = {(r.node_id, r.component) for r in connected_components_star(e).collect()}
-    finally:
-        spark.conf.unset("spark.graft.cc.driverEdgeCap")
-    assert fast_hm == slow_hm == fast_st == slow_st
+    assert _cc(spark, e) == _cc(spark, e, cap=0) == _py_cc(pairs)
 
 
 def test_cc_driver_fast_path_is_jvm_literal(spark):
     # the fast path's result must not plan a pickled Python RDD scan:
-    # json-literal relation + checkpoint (localrel contract)
+    # the union-find result is a JVM-local Arrow relation
     e = _edges(spark, [(1, 2), (2, 3)])
     comp = connected_components(e)
     assert {(r.node_id, r.component) for r in comp.collect()} == {
@@ -118,15 +156,54 @@ def test_cc_driver_fast_path_is_jvm_literal(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_star_cc_random_matches_hashmin(spark):
+def test_cc_random_matches_union_find(spark):
     import random
 
     rng = random.Random(7)
     pairs = [(rng.randrange(200), rng.randrange(200)) for _ in range(300)]
     e = _edges(spark, pairs)
-    got = {(r.node_id, r.component) for r in connected_components_star(e).collect()}
-    want = {(r.node_id, r.component) for r in connected_components(e).collect()}
-    assert got == want
+    want = _py_cc(pairs)
+    assert _cc(spark, e) == want
+    assert _cc(spark, e, cap=0) == want
+
+
+def test_cc_gate_matrix_hands_off_after_one_round(spark, monkeypatch):
+    """cap=0 runs the star loop to convergence, a cap the contracted
+    set (plus the self-loop rows) crosses after one round hands that
+    set to the union-find, and the default cap closes the raw edges on
+    the driver — all equal to the union-find reference over negative
+    ids and ids near 2**62, self-loop-only nodes included."""
+    import random
+
+    from biodwh2_arcadedb_server_spark.operators import graph
+
+    rng = random.Random(2026)
+    ids = [-(2**62) + i for i in range(60)] + [2**62 - i for i in range(60)]
+    ids += [-i for i in range(1, 41)]
+    pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(260)]
+    pairs += [(2**62 + 7, 2**62 + 7), (-5, -5)]
+    canonical = {(max(a, b), min(a, b)) for a, b in pairs if a != b}
+    after_one = _py_star_round(canonical)
+    assert 0 < len(after_one) < len(canonical)
+    handoff = len(after_one) + sum(a == b for a, b in pairs)
+    e = _edges(spark, pairs)
+    want = _py_cc(pairs)
+
+    handed = []
+    real = graph._cc_driver
+
+    def spy(und, id_col_out):
+        handed.append(und.count())
+        return real(und, id_col_out)
+
+    monkeypatch.setattr(graph, "_cc_driver", spy)
+    assert _cc(spark, e, cap=0) == want
+    assert handed == []
+    assert _cc(spark, e, cap=handoff) == want
+    assert handed == [handoff]
+    handed.clear()
+    assert _cc(spark, e) == want
+    assert handed == [len(pairs)]
 
 
 def test_pagerank_against_numpy(spark, sf_medium):

@@ -158,3 +158,34 @@ def test_priority_live_registry_runs_git_path():
     q = entry_mod.queries()
     assert len(q) == len(set(q))
     assert "q146_shortestpath_dialect" in q
+
+
+def test_priority_deps_cover_dedup_closure():
+    """dedup.near_dup_clusters runs operators.graph.connected_components,
+    so every probe module that imports dedup — at module level or
+    inside a function — must watch graph.py, or churn in the CC engine
+    never re-prioritizes its probes."""
+    import ast
+    import importlib.util
+
+    pkg = "biodwh2_arcadedb_server_spark"
+    dedup = f"{pkg}.operators.dedup"
+
+    def imported(module: str) -> set[str]:
+        origin = importlib.util.find_spec(module).origin
+        with open(origin) as fh:
+            tree = ast.parse(fh.read())
+        out = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                out |= {a.name for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                out.add(node.module)
+                out |= {f"{node.module}.{a.name}" for a in node.names}
+        return out
+
+    modules = {fn.__module__ for fn in _QUERIES.values()}
+    reaching = sorted(m for m in modules if dedup in imported(m))
+    assert reaching  # the walk itself found the dedup probes
+    for module in reaching:
+        assert f"{pkg}/operators/graph.py" in entry_mod._deps_for(module), module

@@ -1778,3 +1778,29 @@ def test_jpeg_frame_rows_match_text_oracle(spark, sf_small):
         for fr in range(16):
             want = (16, round((cs[(fr // 8) * 2] + cs[(fr // 8) * 2 + 1]) / 2, 4))
             assert got[(row.doc_id, fr)] == want, (row.doc_id, fr)
+
+
+def test_session_cache_evicts_dead_sessions(monkeypatch):
+    """The derived-table cache keys on applicationId; an insert under a
+    new session drops every entry of the old one, while same-session
+    lookups keep hitting."""
+    from types import SimpleNamespace
+
+    from biodwh2_arcadedb_server_spark.operators import pipeline_queries as pq
+
+    class _Frame:
+        def localCheckpoint(self, eager):
+            return self
+
+    def session(app):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+    monkeypatch.setattr(pq, "_SESSION_CACHE", {})
+    old = session("app-old")
+    first = pq._cached_ckpt(old, ("a", "sf"), _Frame)
+    pq._cached_ckpt(old, ("b", "sf"), _Frame)
+    assert pq._cached_ckpt(old, ("a", "sf"), _Frame) is first
+    assert len(pq._SESSION_CACHE) == 2
+    fresh = pq._cached_ckpt(session("app-new"), ("a", "sf"), _Frame)
+    assert fresh is not first
+    assert list(pq._SESSION_CACHE) == [("app-new", "a", "sf")]

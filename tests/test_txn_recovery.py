@@ -12,6 +12,7 @@ import pytest
 from biodwh2_arcadedb_server_spark import transactions
 from biodwh2_arcadedb_server_spark.arcadesql import ArcadeSQLError, execute
 from biodwh2_arcadedb_server_spark.transactions import (
+    TransactionConflict,
     TransactionError,
     TransactionManager,
 )
@@ -120,3 +121,26 @@ def test_update_unknown_property_clean_error(spark, txn_ws):
         run("UPDATE Nation REMOVE ghost WHERE natural_key = 0")
     with pytest.raises(ArcadeSQLError, match="unknown propert"):
         run("UPDATE EDGE IN_REGION SET ghost = 1")
+
+
+def test_commit_conflicts_with_value_only_update(spark, txn_ws):
+    """A value-only UPDATE between begin and commit leaves
+    manifest.json byte-identical but swaps the label's dataset
+    directory; the commit must see the workspace changed and refuse
+    to swap in a shadow that lacks the update (lost update)."""
+    mgr = TransactionManager()
+    sid = mgr.begin(txn_ws)
+    mgr.stage(sid, "INSERT INTO Nation SET natural_key = 972, n_name = 'Z'")
+    manifest = os.path.join(txn_ws, "manifest.json")
+    with open(manifest, "rb") as fh:
+        before = fh.read()
+    execute(
+        spark, "UPDATE Nation SET n_name = 'KEPT' WHERE natural_key = 3",
+        workspace_dir=txn_ws, allow_writes=True,
+    ).collect()
+    with open(manifest, "rb") as fh:
+        assert fh.read() == before
+    with pytest.raises(TransactionConflict):
+        mgr.commit(spark, sid, allow_writes=True)
+    got = execute(spark, "SELECT n_name FROM Nation WHERE natural_key = 3").collect()
+    assert [r.n_name for r in got] == ["KEPT"]
